@@ -35,8 +35,6 @@ LAYER_METRICS = (
 _PUSHDOWN_RULES = ','.join(f'org.apache.spark.sql.catalyst.optimizer.{r}'
                            for r in ('PushDownPredicates', 'PushPredicateThroughJoin'))
 JOIN_ROWS_GROUP = 'layer-spatial_join.rows'
-# the resolution the h3_cell_counts query tiles at
-H3_RES = 7
 
 
 @contextmanager
@@ -110,24 +108,30 @@ class Probes:
         out['kernels.niemeyer_encode_s'] = self._kernel(
             'kernels.niemeyer_encode', lambda: niemeyer.encode(lon, lat, length, base))
 
+    def _tile_points(self, build_query, out: dict) -> None:
+        with captured(tiling, 'with_cell') as calls:
+            build_query('niemeyer_cell_counts')
+            build_query('h3_cell_counts')
+        # both tilings of a pass, each into the noop sink
+        out['tiling.with_cell_s'] = sum(
+            self._noop(f"tiling.with_cell.{c.arguments['scheme']}",
+                       tiling.with_cell(*c.args, **c.kwargs))
+            for c in calls)
+        # the H3 kernel on the points the h3 query tiles, at its resolution
+        a = next(c for c in calls if c.arguments['scheme'] == 'h3').arguments
+        self.spark.sparkContext.setJobGroup('layer-kernels.h3_input', 'h3 input')
+        pdf = a['df'].select(a['lat'], a['lon']).toPandas()
+        lat = pdf[a['lat']].to_numpy(np.float64)
+        lon = pdf[a['lon']].to_numpy(np.float64)
+        out['kernels.h3_cell_s'] = self._kernel(
+            'kernels.h3_cell', lambda: h3_core.latlng_to_cell(lat, lon, a['resolution']))
+
     def _geofence_join(self, build_query, out: dict) -> None:
-        with captured(spatial_join, 'spatial_join_points') as calls, \
-                captured(spatial_join, 'with_cell') as cells:
+        with captured(spatial_join, 'spatial_join_points') as calls:
             build_query('spatial_join_circles')
         args, kw = calls[0].args, calls[0].kwargs
         out['spatial_join.join_s'] = self._noop(
             'spatial_join.join', spatial_join.spatial_join_points(*args, **kw))
-        c = cells[0]
-        out['tiling.with_cell_s'] = self._noop(
-            'tiling.with_cell', tiling.with_cell(*c.args, **c.kwargs))
-        # the H3 kernel on the same customer points, at the resolution of
-        # the h3_cell_counts query
-        self.spark.sparkContext.setJobGroup('layer-kernels.h3_input', 'h3 input')
-        pdf = c.arguments['df'].select(c.arguments['lat'], c.arguments['lon']).toPandas()
-        lat = pdf[c.arguments['lat']].to_numpy(np.float64)
-        lon = pdf[c.arguments['lon']].to_numpy(np.float64)
-        out['kernels.h3_cell_s'] = self._kernel(
-            'kernels.h3_cell', lambda: h3_core.latlng_to_cell(lat, lon, H3_RES))
         # one untimed run with the filter kept above the join: the join
         # node's output rows are then the candidates, the filter's the matches
         conf = self.spark.conf

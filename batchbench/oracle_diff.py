@@ -35,6 +35,7 @@ def main(argv=None) -> int:
     from geostructures_spark.plans.session import get_session
 
     import inputs
+    import procs
     import workloads
 
     work = os.path.join(run.STATE, f'oracle_diff-{os.getpid()}')
@@ -49,8 +50,7 @@ def main(argv=None) -> int:
         spark = get_session(extra_conf=conf)
         verdict = oracle.check(entry.queries()[args.query](spark, dirs['data']).toPandas())
     finally:
-        if spark is not None:
-            spark.stop()
+        procs.stop_spark(spark, os.getpid())
         shutil.rmtree(work, ignore_errors=True)
     print(f'{args.query} seed={args.seed} scale={args.scale}: {verdict}')
     return 0 if verdict == 'OK' else 1

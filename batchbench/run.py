@@ -8,9 +8,9 @@ Run from the repository root. One run:
 2. runs each query's oracle_sql() in DuckDB over them (untimed);
 3. sets up three times: a Spark session and a cold first pass, then twice
    more a stopped-and-restarted session and its cold pass;
-4. runs one warm-up pass, then closed-loop passes for S seconds, each pass calling the unchanged
-   queries() entries and collecting their full results, and checks every
-   pass against the oracle;
+4. runs WARMUP_PASSES warm-up passes, then closed-loop passes for S
+   seconds, each pass calling the unchanged queries() entries and
+   collecting their full results, and checks every pass against the oracle;
 5. with --trace 1, also runs the passes into a noop sink, probes each layer
    (layers.py) and reads Spark's event log (eventlog.py).
 
@@ -26,6 +26,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -35,6 +36,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 STATE = os.path.join(ROOT, '.batchbench')
 SETUPS = 3
+# untimed, checked passes between the set-ups and the timed passes
+WARMUP_PASSES = 4
 NOOP_PASSES = 3
 
 
@@ -122,36 +125,44 @@ def main(argv=None) -> int:
               'host_start': procs.host_sample()}
     me = os.getpid()
     queries, oracle_sql = entry.queries(), entry.oracle_sql()
-    query = queries[wl.query]
     spark = None
+    # a SIGTERM unwinds through the finally below, which stops the JVM
+    signal.signal(signal.SIGTERM, _terminate)
     try:
         with spans.span('inputs'):
             record['inputs'] = inputs.write_tables(dirs['data'], args.seed,
                                                    wl.sizes(args.scale))
         input_rows = record['inputs'][wl.input_table]['rows']
         with spans.span('oracle'):
-            oracle = workloads.OracleCheck(dirs['data'], wl.query, oracle_sql[wl.query])
+            oracles = {q: workloads.OracleCheck(dirs['data'], q, oracle_sql[q])
+                       for q in wl.queries}
 
         attempted = failed = 0
         mismatches = []
 
         def run_pass(label: str, sink: str = 'collect', perturb: bool = False):
-            """One pass of the workload's query; returns its span and, for
-            'collect', checks the full result against the oracle."""
+            """One pass of the workload's queries; returns its span and, for
+            'collect', checks every full result against its oracle (with
+            ``perturb``, the first result has one value changed first)."""
             nonlocal attempted, failed
             spark.sparkContext.setJobGroup(label, label)
+            results = {}
             with spans.span(label) as s:
-                df = query(spark, dirs['data'])
-                if sink == 'collect':
-                    result = df.toPandas()
-                else:
-                    df.write.format('noop').mode('overwrite').save()
+                for q in wl.queries:
+                    df = queries[q](spark, dirs['data'])
+                    if sink == 'collect':
+                        results[q] = df.toPandas()
+                    else:
+                        df.write.format('noop').mode('overwrite').save()
             if sink == 'collect':
                 attempted += 1
-                verdict = oracle.check(workloads.perturb(result) if perturb else result)
-                if verdict != 'OK':
+                verdicts = {q: oracles[q].check(
+                    workloads.perturb(r) if perturb and q == wl.queries[0] else r)
+                    for q, r in results.items()}
+                bad = {q: v for q, v in verdicts.items() if v != 'OK'}
+                if bad:
                     failed += 1
-                    mismatches.append({'pass': label, 'verdict': verdict})
+                    mismatches.append({'pass': label, 'verdicts': bad})
             return s
 
         setups = []
@@ -164,19 +175,23 @@ def main(argv=None) -> int:
                 run_pass(f'setup-{i}-pass')
             setups.append({'session_s': _duration(ss), 'setup_s': _duration(s)})
 
-        # the JVM is still compiling hot code after the set-ups: one more
-        # (checked) pass before timing starts
-        run_pass('warmup-pass')
+        # the JVM is still compiling hot code after the set-ups: the CPU of
+        # a pass falls over the first few passes of a session. The JIT warms
+        # by calls, not by time, so the warm-up is a count of passes
+        for i in range(WARMUP_PASSES):
+            run_pass(f'warmup-{i}')
         sampler = procs.PeakRss(me).start()
         passes = []
         deadline = time.perf_counter() + args.seconds
         while not passes or time.perf_counter() < deadline:
             c0 = procs.tree_cpu_s(me)
+            sampler.take()
             s = run_pass(f'pass-{len(passes)}', perturb=args.perturb and not passes)
             passes.append({'wall_s': _duration(s),
                            'cpu_s': procs.tree_cpu_s(me) - c0,
+                           'peak_rss_bytes': sampler.take(),
                            'start': s['start'], 'end': s['end']})
-        peak_rss = sampler.stop()
+        record['peak_rss_run_bytes'] = sampler.stop()
         record['host_end'] = procs.host_sample()
 
         pass_s = statistics.median(p['wall_s'] for p in passes)
@@ -184,7 +199,10 @@ def main(argv=None) -> int:
             'pass_s': (pass_s, 's'),
             'input_rows_per_s': (input_rows / pass_s, '1/s'),
             'cpu_s_per_pass': (statistics.median(p['cpu_s'] for p in passes), 's'),
-            'peak_rss_mb': (peak_rss / 2**20, 'MB'),
+            # each pass's own peak, median over the passes: the largest
+            # single sample of a whole run is an extreme value, and its
+            # quartile spread over ten runs reached a fifth of the median
+            'peak_rss_mb': (statistics.median(p['peak_rss_bytes'] for p in passes) / 2**20, 'MB'),
             'setup_s': (statistics.median(s['setup_s'] for s in setups), 's'),
         }
         record.update({
@@ -237,8 +255,9 @@ def main(argv=None) -> int:
         else:
             metrics = e2e
     finally:
-        if spark is not None:
-            spark.stop()
+        # the session, its JVM and the JVM's Python workers all end here,
+        # on every way out of the run
+        procs.stop_spark(spark, me)
         shutil.rmtree(work, ignore_errors=True)
 
     os.makedirs(os.path.join(STATE, 'records'), exist_ok=True)
@@ -254,6 +273,10 @@ def main(argv=None) -> int:
         'metrics': {k: {'value': v, 'unit': u} for k, (v, u) in metrics.items()},
     }))
     return 0
+
+
+def _terminate(signum, frame):
+    raise SystemExit(128 + signum)
 
 
 def _duration(span: dict) -> float:

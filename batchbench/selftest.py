@@ -6,8 +6,9 @@ For every workload, on one seed:
 - an untraced run of one timed pass must report correct, no failed pass
   and every end-to-end metric of BENCHMARK.json;
 - a traced run whose timed pass has one result value perturbed must report
-  incorrect with exactly that pass failed (the three set-up passes and the
-  warm-up pass, left unperturbed, still match), and every per-layer metric of BENCHMARK.json.
+  incorrect with exactly that pass failed (the set-up and warm-up passes,
+  left unperturbed, still match), and every per-layer metric of
+  BENCHMARK.json.
 Exits 0 when all of that holds.
 """
 
@@ -18,10 +19,14 @@ import os
 import subprocess
 import sys
 
+from run import SETUPS, WARMUP_PASSES
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SEED = 3
 SCALE = '0.02'
+# checked passes of a run with --seconds 0: the set-ups, the warm-ups, one timed
+PASSES = SETUPS + WARMUP_PASSES + 1
 
 
 def run(workload: str, trace: int, perturb: bool) -> dict:
@@ -43,12 +48,12 @@ def main() -> int:
     problems = []
     for w in (x['name'] for x in spec['workloads']):
         clean = run(w, trace=0, perturb=False)
-        if not (clean['correct'] and clean['failed'] == 0 and clean['attempted'] == 5):
+        if not (clean['correct'] and clean['failed'] == 0 and clean['attempted'] == PASSES):
             problems.append(f'{w}: clean run {clean}')
         if set(clean['metrics']) != e2e:
             problems.append(f'{w}: end-to-end metrics {sorted(clean["metrics"])}')
         bad = run(w, trace=1, perturb=True)
-        if bad['correct'] or bad['failed'] != 1 or bad['attempted'] != 5:
+        if bad['correct'] or bad['failed'] != 1 or bad['attempted'] != PASSES:
             problems.append(f'{w}: perturbed run not caught {bad}')
         if set(bad['metrics']) != per_layer:
             problems.append(f'{w}: per-layer metrics {sorted(bad["metrics"])}')

@@ -15,7 +15,8 @@ import pandas as pd
 @dataclass(frozen=True)
 class Workload:
     name: str
-    query: str
+    # the queries() entries one pass runs, in order
+    queries: tuple
     # table -> rows, or for events (rows, users)
     tables: dict
     # the table whose rows count as the pass's input rows
@@ -38,16 +39,22 @@ def scale_sizes(tables: dict, scale: float) -> dict:
 
 
 WORKLOADS = {w.name: w for w in (
-    Workload('ingest_pages', 'pages_mine_cells',
+    Workload('ingest_pages', ('pages_mine_cells',),
              {'documents': 80_000}, 'documents',
              'the deployed pages path: html->text, Arrow regex miner, NumPy '
              'Niemeyer encode, a partial-count shuffle and a large collect',
              side='track_filter'),
-    Workload('geofence_join', 'spatial_join_circles',
+    Workload('tile_points', ('niemeyer_cell_counts', 'h3_cell_counts'),
+             {'customer': 60_000}, 'customer',
+             'tiling only: the JVM closed-form Niemeyer encode beside the '
+             'Arrow H3 kernel UDF, after a scan-widening repartition; no '
+             'miner, no join',
+             side='geofence_join'),
+    Workload('geofence_join', ('spatial_join_circles',),
              {'customer': 50_000, 'supplier': 250}, 'customer',
              'the headline spatial join: a blocking catalog-size collect, '
              'strategy choice and the cell-keyed candidate join'),
-    Workload('track_filter', 'impossible_journeys',
+    Workload('track_filter', ('impossible_journeys',),
              {'events': (40_000, 400)}, 'events',
              'the grouped-Python path: a whole-row shuffle into an '
              'applyInPandas greedy scan per user'),

@@ -22,10 +22,8 @@ count gives the ordinal.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -40,9 +38,6 @@ _QDMS = r'(?P<qlon>[EW]\d{9}) (?P<qlat>[NS]\d{8})'
 MENTION_REGEX = f'(?:{_DEC})|(?:{_DMS})|(?:{_QDMS})'
 _COMPILED = re.compile(MENTION_REGEX)
 
-# batch separator that can never occur inside a match
-_SEP = '\n\x00\n'
-
 POINTS_SCHEMA = ('url string, warc_ts timestamp, point_idx int, '
                  'lon double, lat double, fmt string')
 
@@ -53,112 +48,12 @@ def extract_text_expr(html_col: Column) -> Column:
     return F.regexp_extract(html_col.cast('string'), r'(?s)^<html><body>(.*)</body></html>$', 1)
 
 
-def _mine_batch(texts: pd.Series) -> tuple:
-    """One regex scan over the whole batch. Returns (row_positions,
-    point_idx, lon, lat, fmt) numpy arrays."""
-    tl = texts.fillna('').tolist()
-    if not tl:
-        z = np.zeros(0)
-        return (np.zeros(0, np.int64), np.zeros(0, np.int64), z, z.copy(),
-                np.zeros(0, dtype=object))
-    big = _SEP.join(tl)
-    starts = np.zeros(len(tl), dtype=np.int64)
-    lens = np.fromiter((len(t) for t in tl), dtype=np.int64, count=len(tl))
-    if len(tl) > 1:
-        starts[1:] = np.cumsum(lens[:-1] + len(_SEP))
-
-    rows, kinds = [], []
-    g_dec, g_dms, g_q = [], [], []
-    for m in _COMPILED.finditer(big):
-        rows.append(m.start())
-        if m.group('flag') is not None:
-            kinds.append(0)
-            g_dec.append((m.group('flag'), m.group('a'), m.group('b')))
-        elif m.group('lod') is not None:
-            kinds.append(1)
-            g_dms.append((m.group('lod'), m.group('lom'), m.group('los'),
-                          m.group('loq'), m.group('lad'), m.group('lam'),
-                          m.group('las'), m.group('laq')))
-        else:
-            kinds.append(2)
-            g_q.append((m.group('qlon'), m.group('qlat')))
-
-    n = len(rows)
-    if n == 0:
-        z = np.zeros(0)
-        return (np.zeros(0, np.int64), np.zeros(0, np.int64), z, z.copy(),
-                np.zeros(0, dtype=object))
-
-    pos = np.asarray(rows, dtype=np.int64)
-    row_idx = np.searchsorted(starts, pos, side='right') - 1
-    kinds = np.asarray(kinds, dtype=np.int64)
-
-    lon = np.zeros(n)
-    lat = np.zeros(n)
-    fmt = np.empty(n, dtype=object)
-
-    if g_dec:
-        d = np.array(g_dec, dtype=object)
-        a = d[:, 1].astype(np.float64)
-        b = d[:, 2].astype(np.float64)
-        is_lonlat = d[:, 0] == 'lonlat'
-        sel = kinds == 0
-        lon[sel] = np.where(is_lonlat, a, b)
-        lat[sel] = np.where(is_lonlat, b, a)
-        fmt[sel] = 'decimal'
-
-    if g_dms:
-        d = np.array(g_dms, dtype=object)
-        # from_dms: deg + min/60 + sec/3600, sign by quadrant; no rounding
-        dlon = (d[:, 0].astype(np.float64) + d[:, 1].astype(np.float64) / 60
-                + d[:, 2].astype(np.float64) / 3600)
-        dlon *= np.where(d[:, 3] == 'W', -1.0, 1.0)
-        dlat = (d[:, 4].astype(np.float64) + d[:, 5].astype(np.float64) / 60
-                + d[:, 6].astype(np.float64) / 3600)
-        dlat *= np.where(d[:, 7] == 'S', -1.0, 1.0)
-        sel = kinds == 1
-        lon[sel] = dlon
-        lat[sel] = dlat
-        fmt[sel] = 'dms'
-
-    if g_q:
-        qlon_s = np.array([s for s, _ in g_q])
-        qlat_s = np.array([s for _, s in g_q])
-        # from_qdms: QDDDMMSSHH -> deg + min/60 + 'SS.HH'/3600; 6dp round_half_up
-        lon_deg = np.array([s[1:4] for s in qlon_s], dtype=np.float64)
-        lon_min = np.array([s[4:6] for s in qlon_s], dtype=np.float64)
-        lon_sec = np.array([s[6:8] + '.' + s[8:] for s in qlon_s], dtype=np.float64)
-        vlon = (lon_deg + lon_min / 60 + lon_sec / 3600)
-        vlon *= np.where(np.array([s[0] for s in qlon_s]) == 'W', -1.0, 1.0)
-        lat_deg = np.array([s[1:3] for s in qlat_s], dtype=np.float64)
-        lat_min = np.array([s[3:5] for s in qlat_s], dtype=np.float64)
-        lat_sec = np.array([s[5:7] + '.' + s[7:] for s in qlat_s], dtype=np.float64)
-        vlat = (lat_deg + lat_min / 60 + lat_sec / 3600)
-        vlat *= np.where(np.array([s[0] for s in qlat_s]) == 'S', -1.0, 1.0)
-        sel = kinds == 2
-        lon[sel] = round_half_up(vlon, 6)
-        lat[sel] = round_half_up(vlat, 6)
-        fmt[sel] = 'qdms'
-
-    lon, lat = normalize_lonlat(lon, lat)
-
-    # point_idx: running count within each row (matches are in position order)
-    point_idx = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        # vectorized segmented cumcount (reset at each row change)
-        change = np.r_[True, row_idx[1:] != row_idx[:-1]]
-        seg_starts = np.flatnonzero(change)
-        seg_id = np.cumsum(change) - 1
-        point_idx = np.arange(n) - seg_starts[seg_id]
-    return row_idx, point_idx, lon, lat, fmt
-
-
 _COMPILED_BYTES = re.compile(MENTION_REGEX.encode('utf-8'))
 
 
 def _parse_match_lists(rows, kinds, g_dec, g_dms, g_q):
     """Shared vectorized conversion of collected regex groups (str or bytes)
-    to lon/lat/fmt arrays; same math as _mine_batch's body."""
+    to lon/lat/fmt arrays."""
     n = len(rows)
     lon = np.zeros(n)
     lat = np.zeros(n)

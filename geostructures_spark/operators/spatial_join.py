@@ -1,12 +1,17 @@
-"""The spatial join: points x shapes via cell candidates + exact kernels.
+"""The spatial join: points x shapes via cell candidates + exact predicates.
 
-Architecture (SURVEY.md §3.2):
+Architecture (SURVEY.md §3.2): covers -> cell equi-join -> exact predicate,
+with ONE plan per shape kind, chosen per row:
 
-  points --with_cell--> keyed by cell
-  shapes --cover_shapes--> (shape_id, cell), broadcast
-  candidates = points ⋈ broadcast(covers) ON cell        (equi-join)
-  time gate  = right-open interval Column predicate      (JVM, pre-UDF)
-  exact      = Arrow-batched kernel predicate per shape  (pandas UDF)
+  plain circles: SQL spherical-cap cover rows carrying (center, radius)
+                 candidates = points ⋈ covers ON packed (i, j) box key
+                 exact      = haversine Column predicate      (JVM, codegen)
+  other shapes:  cover_shapes -> (shape_id, cell)
+                 candidates = points ⋈ covers ON cell
+                 exact      = Arrow-batched kernel predicate over the
+                              shape's JSON spec, joined by shape_id (pandas UDF)
+  both:          time gate  = right-open interval Column predicate (pre-UDF)
+                 result     = union of the two branches' matches
 
 The cell equi-join replaces the reference's per-pair sweep-line pruning
 (_geometry.py:223-316) as the candidate structure; the exact predicate
@@ -14,10 +19,13 @@ replays contains_coordinate/intersects semantics (structures.py:440-458 etc.)
 bit-for-bit via kernels.shapes.
 
 Scale notes:
-- the shapes side is broadcast (shape catalogs are ~10^4-10^6 rows; the
-  pages/points side is the 10^12-row one);
-- shape *geometries* travel to executors once as a Spark broadcast variable,
-  not per-row through the join;
+- building the join runs no Spark job: routing is a per-row filter, and a
+  branch the optimizer proves empty (a literal-kind catalog) leaves the plan;
+- shape geometries travel to their candidate rows as a JSON spec through a
+  shape_id equi-join, never through the driver;
+- the cover side is broadcast (shape catalogs are ~10^4-10^6 rows; the
+  pages/points side is the 10^12-row one); ``max_broadcast_shapes=0`` drops
+  the hint and leaves broadcast vs shuffle to the planner and AQE;
 - hot cells (cities) can be salted: ``salt_shards > 0`` replicates cover
   rows per shard and salts the points side, splitting a hot cell across
   ``shards`` tasks; AQE skew-join is the backstop.
@@ -25,24 +33,23 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Dict, Optional
+from functools import reduce
+from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geostructures_spark.functions.geo import interval_contains_instant_expr
+from geostructures_spark.functions.geo import (
+    haversine_expr, interval_contains_instant_expr, niemeyer_quantize_exprs,
+)
 from geostructures_spark.operators.tiling import (
     cover_shapes, shape_row_to_kernel, with_cell,
 )
 
 __all__ = ['spatial_join_points', 'filter_points_by_shape']
-
-
-_BROADCAST_MAX_SHAPES = 200_000
-_BROADCAST_MAX_RING_VERTS = 20_000_000   # ~640 MB of packed ring floats
 
 
 def _plain_circle_expr():
@@ -56,44 +63,17 @@ def _plain_circle_expr():
             F.array().cast('array<array<struct<lon:double,lat:double>>>'))) <= 0))
 
 
-def _catalog_size(shapes: DataFrame, length: int = None, base: int = 16):
-    """(n_shapes, total ring vertices, n_plain_circles, n_sql_cover) — ONE
-    cheap agg over the catalog side deciding broadcast vs shipped-spec
-    execution, the all-circle JVM exact predicate (plain circle = no holes,
-    radius set), and how many shapes the pure-SQL circle cover can serve
-    (when ``length`` is given and base is 16)."""
-    sql_ok = (_sql_cover_ok_expr(length) if (length is not None and base == 16)
-              else F.lit(False))
-    row = shapes.agg(
-        F.count('*').alias('n'),
-        F.coalesce(F.sum(F.aggregate(
-            F.coalesce(F.col('rings'),
-                       F.array().cast('array<array<struct<lon:double,lat:double>>>')),
-            F.lit(0), lambda acc, ring: acc + F.size(ring))), F.lit(0)).alias('verts'),
-        F.coalesce(F.sum(_plain_circle_expr().cast('int')), F.lit(0)).alias('plain'),
-        F.coalesce(F.sum(sql_ok.cast('int')), F.lit(0)).alias('sql_cover'),
-    ).collect()[0]
-    return (int(row['n']), int(row['verts']), int(row['plain']),
-            int(row['sql_cover']))
-
-
-def _shape_broadcast(spark: SparkSession, shapes: DataFrame):
-    """Collect the (small) shapes side and broadcast kernel dicts keyed by
-    shape_id. One driver collect of catalog metadata — not data-path collect.
-    Callers guard with _catalog_size before taking this path."""
-    cols = ['shape_id', 'kind', 'params', 'rings'] + (
-        ['poly_sizes'] if 'poly_sizes' in shapes.columns else [])
-    rows = shapes.select(*cols).collect()
-    catalog = {}
-    for r in rows:
-        d = r.asDict(recursive=True)
-        catalog[d['shape_id']] = shape_row_to_kernel(d)
-    return spark.sparkContext.broadcast(catalog)
+def _optimizes_to_empty(df: DataFrame) -> bool:
+    """True when Catalyst proves ``df`` empty at plan time (a routing
+    filter folded to FALSE over literal kinds). Optimizing runs no job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return (plan.getClass().getSimpleName() == 'LocalRelation'
+            and plan.data().isEmpty())
 
 
 def _shape_spec_col(shapes: DataFrame):
-    """One JSON column carrying the whole shape geometry — the no-broadcast
-    transport: specs travel through the equi-join instead of the driver."""
+    """One JSON column carrying the whole shape geometry: specs travel
+    through a shape_id equi-join to their candidate rows."""
     fields = [F.col('kind'), F.col('params'), F.col('rings')] + (
         [F.col('poly_sizes')] if 'poly_sizes' in shapes.columns else [])
     names = ['kind', 'params', 'rings'] + (
@@ -104,8 +84,7 @@ def _shape_spec_col(shapes: DataFrame):
 def _exact_predicate_spec_udf():
     """Exact containment over shipped shape specs: per Arrow batch, group
     candidate rows by shape_id (argsort), build each kernel dict once from
-    its JSON spec, evaluate vectorized. No driver collect, no broadcast —
-    the scale path for catalogs beyond the broadcast guard."""
+    its JSON spec, evaluate vectorized. No driver collect, no broadcast."""
     import json
 
     from geostructures_spark.kernels import shapes as shp
@@ -126,33 +105,6 @@ def _exact_predicate_spec_udf():
         for i in range(len(bounds) - 1):
             sel = order[bounds[i]:bounds[i + 1]]
             shape = shape_row_to_kernel(json.loads(specs[sel[0]]))
-            out[sel] = shp.shape_contains_points(shape, lons[sel], lats[sel])
-        return pd.Series(out, index=shape_id.index)
-
-    return _pred
-
-
-def _exact_predicate_udf(bc, predicate: str):
-    from geostructures_spark.kernels import shapes as shp
-
-    @F.pandas_udf(T.BooleanType())
-    def _pred(shape_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = np.zeros(len(shape_id), dtype=bool)
-        if len(shape_id) == 0:
-            return pd.Series(out)
-        sid = shape_id.to_numpy()
-        lons = lon.to_numpy(np.float64)
-        lats = lat.to_numpy(np.float64)
-        catalog = bc.value
-        # batch by shape: vectorized kernel per shape over its candidates
-        order = np.argsort(sid, kind='stable')
-        sorted_sid = sid[order]
-        bounds = np.flatnonzero(np.r_[True, sorted_sid[1:] != sorted_sid[:-1], True])
-        for i in range(len(bounds) - 1):
-            sel = order[bounds[i]:bounds[i + 1]]
-            shape = catalog.get(sorted_sid[bounds[i]])
-            if shape is None:
-                continue
             out[sel] = shp.shape_contains_points(shape, lons[sel], lats[sel])
         return pd.Series(out, index=shape_id.index)
 
@@ -206,26 +158,39 @@ def _circle_window_exprs(length: int):
     return i0, i1, j0, j1, nbox, full
 
 
-def _sql_cover_ok_expr(length: int):
-    """Deterministic routing predicate: this shape's cover can be built by
-    the pure-SQL circle window (plain circle, bounded box count). Never
-    NULL (FALSE for non-circles by three-valued AND)."""
-    nbox = _circle_window_exprs(length)[4]
-    return _plain_circle_expr() & (nbox <= _SQL_COVER_MAX_BOXES)
+def _circle_route_expr(length: int):
+    """Per-row routing predicate: this shape takes the circle branch (plain
+    circle whose SQL cover window stays within the box cap). A grid of
+    2^(4*length) boxes within the cap (length <= 4) cannot bind it, so the
+    term is left out: over literal kinds the predicate then folds to a
+    constant and the unused branch leaves the plan. Never NULL."""
+    ok = _plain_circle_expr()
+    if 1 << (4 * length) > _SQL_COVER_MAX_BOXES:
+        ok = ok & (_circle_window_exprs(length)[4] <= _SQL_COVER_MAX_BOXES)
+    return F.coalesce(ok, F.lit(False))
+
+
+def _packed_box_key(lon, lat, length: int, drop_chars: int = 0):
+    """The circle branch's join key: the (i, j) Niemeyer box indices at
+    ``length`` (parent boxes when ``drop_chars`` > 0) packed into a long —
+    the same closed-form quantization the SQL cover windows enumerate."""
+    s = 2 * drop_chars
+    qlon, qlat = niemeyer_quantize_exprs(lon, lat, length)
+    return F.shiftleft(F.shiftright(qlon, s), 32).bitwiseOR(F.shiftright(qlat, s))
 
 
 def _circle_cover_sql(circles: DataFrame, length: int,
-                      drop_chars: int = 0,
-                      with_params: bool = False,
-                      numeric_key: bool = False) -> DataFrame:
-    """(shape_id, cell) cover rows for plain circles as a pure Column plan:
-    the bbox enumeration window of kernels.tiling_niemeyer._enum_cover,
-    trimmed by a triangle-inequality distance test — a SUPERSET of the
-    Python cover, so the exact containment predicate downstream sees every
-    candidate it saw before (plus a few extra it rejects; results
-    identical). Cells are built by interleaving the (i, j) box indices
-    directly — no Python stage. Base 16 only; caller routes with
-    _sql_cover_ok_expr so the per-shape explode stays bounded.
+                      drop_chars: int = 0, carry=()) -> DataFrame:
+    """(shape_id, _ck, _clon, _clat, _r, *carry) cover rows for plain
+    circles as a pure Column plan: the bbox enumeration window of
+    kernels.tiling_niemeyer._enum_cover, trimmed by a triangle-inequality
+    distance test — a SUPERSET of the Python cover, so the exact predicate
+    downstream sees every candidate (plus a few extra it rejects; results
+    identical). The key ``_ck`` is the packed (i, j) box-index pair
+    (_packed_box_key) — no Python stage, no cell string. Callers route with
+    _circle_route_expr so the per-shape explode stays bounded. The circle's
+    (center, radius) triple and the ``carry`` columns ride every cover row,
+    so the exact predicate needs no second join.
 
     Trim-safety: a cell containing a point p inside the circle satisfies
     hav(center, clamp(center)) <= hav(center, p) + hav(p, clamp(center))
@@ -238,17 +203,12 @@ def _circle_cover_sql(circles: DataFrame, length: int,
     ``drop_chars`` > 0 emits the cover at PARENT-cell granularity (the
     Niemeyer prefix of length - drop_chars chars; one dropped char = 2
     bits per axis): ~16x fewer cover rows per dropped char for the same
-    candidate-superset guarantee — the knob that keeps the broadcast
-    relation small when candidates are cheap to reject (all-circle JVM
-    predicate). Join such covers against a substring of the points' cell
-    column."""
+    candidate-superset guarantee — the knob that keeps a broadcast
+    relation small when candidates are cheap to reject (JVM predicate)."""
     import math as _math
 
-    from geostructures_spark.functions.geo import (
-        haversine_expr, niemeyer_interleave_expr)
     from geostructures_spark.kernels.geodesy import EARTH_RADIUS_METERS
-    out_len = length - drop_chars
-    assert out_len >= 1
+    assert length - drop_chars >= 1
     s = 2 * drop_chars          # bits dropped per axis
     m = (4 * length) // 2
     w = 360.0 / (1 << (m - s))  # parent-cell geometry
@@ -260,8 +220,9 @@ def _circle_cover_sql(circles: DataFrame, length: int,
     if s:
         i0, i1 = F.shiftright(i0, s), F.shiftright(i1, s)
         j0, j1 = F.shiftright(j0, s), F.shiftright(j1, s)
+    keep_cols = ['shape_id', *carry, '_clon', '_clat', '_r', '_full']
     base = circles.select(
-        'shape_id', clon.alias('_clon'), clat.alias('_clat'),
+        'shape_id', *carry, clon.alias('_clon'), clat.alias('_clat'),
         r.alias('_r'), full.alias('_full'),
         i0.alias('_i0'), i1.alias('_i1'),
         j0.alias('_j0'), j1.alias('_j1'))
@@ -275,9 +236,9 @@ def _circle_cover_sql(circles: DataFrame, length: int,
         n_parts = max(8, spark.sparkContext.defaultParallelism)
         base = base.repartition(n_parts, 'shape_id')
     rows = (base
-            .select('shape_id', '_clon', '_clat', '_r', '_full', '_j0', '_j1',
+            .select(*keep_cols, '_j0', '_j1',
                     F.explode(F.sequence('_i0', '_i1')).alias('_i'))
-            .select('shape_id', '_clon', '_clat', '_r', '_full', '_i',
+            .select(*keep_cols, '_i',
                     F.explode(F.sequence('_j0', '_j1')).alias('_j')))
     lon_lo = F.lit(-180.0) + F.col('_i') * w
     lat_lo = F.lit(-90.0) + F.col('_j') * h
@@ -291,16 +252,30 @@ def _circle_cover_sql(circles: DataFrame, length: int,
     keep = F.col('_full') | (
         haversine_expr(F.col('_clon'), F.col('_clat'), lon_cl, lat_cl)
         <= F.col('_r') + pad)
-    extra = ['_clon', '_clat', '_r'] if with_params else []
-    # numeric_key: skip building the cell STRING — the join key is the
-    # packed (i, j) box-index pair. Only valid when the points side derives
-    # the same packed key from the same quantization (caller-guarded), and
-    # it lets Catalyst prune the string encode wholesale.
-    key = (F.shiftleft(F.col('_i'), 32).bitwiseOR(F.col('_j')).alias('cell')
-           if numeric_key else
-           niemeyer_interleave_expr(F.col('_i'), F.col('_j'), out_len)
-           .alias('cell'))
-    return rows.filter(keep).select('shape_id', key, *extra)
+    key = F.shiftleft(F.col('_i'), 32).bitwiseOR(F.col('_j')).alias('_ck')
+    return rows.filter(keep).select('shape_id', key, '_clon', '_clat', '_r',
+                                    *carry)
+
+
+def _candidates(points: DataFrame, covers: DataFrame, key: str,
+                salt_shards: int, broadcast: bool) -> DataFrame:
+    """points ⋈ covers ON ``key``; with ``salt_shards`` > 0 the cover rows
+    are replicated per shard and the points side is salted (cell#shard)."""
+    if salt_shards > 0:
+        spark = points.sparkSession
+        shards = spark.range(salt_shards).select(F.col('id').cast('int').alias('_shard'))
+        covers = (covers.crossJoin(F.broadcast(shards))
+                  .withColumn('join_key', F.concat_ws(
+                      '#', key, F.col('_shard').cast('string')))
+                  .drop(key, '_shard'))
+        points = points.withColumn(
+            'join_key',
+            F.concat_ws('#', F.col(key),
+                        F.pmod(F.xxhash64(*[c for c in ('url', 'lon', 'lat')
+                                            if c in points.columns]),
+                               F.lit(salt_shards)).cast('string')))
+        key = 'join_key'
+    return points.join(F.broadcast(covers) if broadcast else covers, key)
 
 
 def spatial_join_points(
@@ -311,156 +286,70 @@ def spatial_join_points(
     time_gated: bool = True,
     salt_shards: int = 0,
     cell_col: str = 'cell',
-    max_broadcast_shapes: int = _BROADCAST_MAX_SHAPES,
-    max_broadcast_ring_verts: int = _BROADCAST_MAX_RING_VERTS,
+    max_broadcast_shapes: Optional[int] = None,
 ) -> DataFrame:
     """points ⨝ shapes with exact containment (point-probe semantics of
     contains/intersects, which coincide for points — structures.py:156-157).
 
-    Returns candidate-join columns: all point columns + shape_id.
-    ``time_gated`` applies the right-open instant-in-interval predicate
-    (reference _base.py:282-291: time gate short-circuits before spatial)
-    using points.warc_ts vs shapes dt_start/dt_end; shapes with NULL dt
-    match all times (untimed shapes tested spatially, collections.py:447-452).
+    Returns all point columns (plus ``cell_col`` when the call assigns it)
+    + shape_id. ``time_gated`` applies the right-open instant-in-interval
+    predicate (reference _base.py:282-291: time gate short-circuits before
+    spatial) using points.warc_ts vs shapes dt_start/dt_end; shapes with
+    NULL dt match all times (untimed shapes tested spatially,
+    collections.py:447-452).
 
-    Physical strategy is size-guarded: catalogs within the broadcast budget
-    collect once to the driver and broadcast kernel dicts (fastest); larger
-    catalogs never touch the driver — covers join as a shuffle join and the
-    geometry travels to its candidate rows as a JSON spec through a
-    shape_id equi-join (set the thresholds to 0 to force that path)."""
-    spark = points.sparkSession
-    had_cell = cell_col in points.columns
-    if not had_cell:
+    Each shape is routed by kind (module docstring): plain circles take the
+    all-JVM plan, every other shape the shipped-spec plan. The cover side
+    is broadcast unless ``max_broadcast_shapes`` is 0, which leaves the
+    choice to the planner and AQE and builds circle covers at full cell
+    resolution. Building the result runs no Spark job."""
+    if cell_col not in points.columns:
         points = with_cell(points, length, base, cell_col=cell_col)
-
-    n_shapes, n_verts, n_plain, n_sql = _catalog_size(shapes, length, base)
-    use_broadcast = (n_shapes <= max_broadcast_shapes and
-                     n_verts <= max_broadcast_ring_verts)
-    all_plain_circles = n_shapes > 0 and n_plain == n_shapes
+    out_cols = points.columns + ['shape_id']
     gated = time_gated and 'warc_ts' in points.columns
-
-    # cover side: plain circles within the box cap get the pure-SQL window
-    # cover (no Python stage); everything else keeps the per-shape
-    # applyInPandas covering. The SQL cover is a superset of the Python one
-    # for the same circle, so candidates only grow and the exact predicate
-    # keeps results identical. When ALL covers are SQL-built, the JVM
-    # predicate is cheap, and the covers broadcast, emit the cover at
-    # parent-cell granularity (one prefix char dropped): ~16x fewer rows in
-    # the broadcast relation for a modest candidate inflation the codegen
-    # haversine filter absorbs.
-    prefix_drop = 1 if (n_sql == n_shapes and n_sql > 0 and use_broadcast
-                        and all_plain_circles and length >= 2) else 0
-    # when every cover row is SQL-built for a plain circle, the circle's
-    # (center, radius) triple rides the cover rows themselves — the exact
-    # predicate then needs NO second join at all
-    carry_params = all_plain_circles and n_sql == n_shapes and n_sql > 0
-    # when we assigned the points' cells ourselves (same closed-form
-    # quantization as the SQL cover windows), join on the packed (i, j)
-    # integer key instead of cell strings: no string building on either
-    # side, and Catalyst prunes the points' string encode wholesale when
-    # the caller doesn't read it
-    numeric_key = carry_params and not had_cell and base == 16
-    if n_sql > 0:
-        sql_ok = _sql_cover_ok_expr(length)
-        covers = _circle_cover_sql(shapes.filter(sql_ok), length, prefix_drop,
-                                   with_params=carry_params,
-                                   numeric_key=numeric_key)
-        if n_sql < n_shapes:
-            rest = shapes.filter(~sql_ok)
-            cover_parts = min(64, max(4, (n_shapes - n_sql) // 25 + 1))
-            covers = covers.unionByName(
-                cover_shapes(rest, length, base, n_partitions=cover_parts))
-    else:
-        cover_parts = min(64, max(4, n_shapes // 25 + 1))
-        covers = cover_shapes(shapes, length, base, n_partitions=cover_parts)
-
-    if gated:
-        # only attach interval columns when the gate is live — an untimed
-        # join skips the dt map join outright
-        dt_map = shapes.select('shape_id', 'dt_start', 'dt_end')
-        covers = covers.join(F.broadcast(dt_map) if use_broadcast else dt_map,
-                             'shape_id')
-
-    if numeric_key:
-        from geostructures_spark.functions.geo import niemeyer_quantize_exprs
-        s = 2 * prefix_drop
-        qlon, qlat = niemeyer_quantize_exprs(F.col('lon'), F.col('lat'),
-                                             length)
-        points = points.withColumn(
-            '_ck', F.shiftleft(F.shiftright(qlon, s), 32)
-            .bitwiseOR(F.shiftright(qlat, s)))
-        pkey = '_ck'
-    elif prefix_drop:
-        points = points.withColumn(
-            '_ck', F.substring(F.col(cell_col), 1, length - prefix_drop))
-        pkey = '_ck'
-    else:
-        pkey = cell_col
-
-    if salt_shards > 0:
-        # replicate the broadcast side per shard; salt the big side
-        shards = spark.range(salt_shards).select(F.col('id').cast('int').alias('_shard'))
-        covers = covers.crossJoin(F.broadcast(shards)).withColumn(
-            'join_key', F.concat_ws('#', 'cell', F.col('_shard').cast('string')))
-        points = points.withColumn(
-            'join_key',
-            F.concat_ws('#', F.col(pkey),
-                        F.pmod(F.xxhash64(*[c for c in ('url', 'lon', 'lat')
-                                            if c in points.columns]),
-                               F.lit(salt_shards)).cast('string')))
-        join_key = 'join_key'
-    else:
-        covers = covers.withColumnRenamed('cell', pkey)
-        join_key = pkey
-
     dt_cols = ['dt_start', 'dt_end'] if gated else []
-    param_cols = ['_clon', '_clat', '_r'] if carry_params else []
-    covers_sel = covers.select(join_key, 'shape_id', *dt_cols, *param_cols)
-    cand = points.join(F.broadcast(covers_sel) if use_broadcast else covers_sel,
-                       join_key)
+    broadcast = max_broadcast_shapes != 0
 
-    if gated:
-        no_dt = F.col('dt_start').isNull() | F.col('dt_end').isNull()
-        gate = no_dt | interval_contains_instant_expr(
-            F.col('dt_start'), F.col('dt_end'), F.col('warc_ts'))
-        cand = cand.filter(gate)
+    def matches(cand: DataFrame, exact) -> DataFrame:
+        if gated:
+            no_dt = F.col('dt_start').isNull() | F.col('dt_end').isNull()
+            cand = cand.filter(no_dt | interval_contains_instant_expr(
+                F.col('dt_start'), F.col('dt_end'), F.col('warc_ts')))
+        return cand.filter(exact).select(*out_cols)
 
-    if all_plain_circles:
+    route = _circle_route_expr(length)
+    circles, others = shapes.filter(route), shapes.filter(~route)
+    parts = []
+    # a branch proven empty leaves the plan; an empty catalog keeps the
+    # (Python-free) circle branch so the result still has its schema
+    if not _optimizes_to_empty(circles) or _optimizes_to_empty(others):
         # exact containment for a circle is haversine(point, center) <=
         # radius — the identical formula (and argument order) the NumPy
         # kernel evaluates (kernels/shapes.py:291-293), as a JVM Column
         # expression: no Arrow boundary, no Python workers, whole-stage
-        # codegen through the candidate join. The (center, radius) triple
-        # rides the cover rows when all covers are SQL-built (no second
-        # join); otherwise it joins by shape_id (24 bytes/shape — never
-        # driver-collected on the no-broadcast path).
-        from geostructures_spark.functions.geo import haversine_expr
-        if not carry_params:
-            params = shapes.select(
-                'shape_id',
-                F.col('params').getField('center_lon').alias('_clon'),
-                F.col('params').getField('center_lat').alias('_clat'),
-                F.col('params').getField('radius').cast('double').alias('_r'))
-            cand = cand.join(F.broadcast(params) if use_broadcast else params,
-                             'shape_id')
-        out = (cand.filter(haversine_expr(F.col('lon'), F.col('lat'),
-                                          F.col('_clon'), F.col('_clat'))
-                           <= F.col('_r'))
-               .drop('_clon', '_clat', '_r'))
-    elif use_broadcast:
-        bc = _shape_broadcast(spark, shapes)
-        pred = _exact_predicate_udf(bc, 'contains')
-        out = cand.filter(pred(F.col('shape_id'), F.col('lon'), F.col('lat')))
-    else:
-        specs = shapes.select('shape_id', _shape_spec_col(shapes).alias('_spec'))
+        # codegen through the candidate join. A broadcast cover is emitted
+        # at parent-cell granularity (one char dropped): ~16x fewer rows
+        # for a modest candidate inflation the haversine filter absorbs.
+        drop = 1 if broadcast and length >= 2 else 0
+        covers = _circle_cover_sql(circles, length, drop, dt_cols)
+        keyed = points.withColumn(
+            '_ck', _packed_box_key(F.col('lon'), F.col('lat'), length, drop))
+        cand = _candidates(keyed, covers, '_ck', salt_shards, broadcast)
+        parts.append(matches(cand, haversine_expr(
+            F.col('lon'), F.col('lat'), F.col('_clon'), F.col('_clat'))
+            <= F.col('_r')))
+    if not _optimizes_to_empty(others):
+        covers = cover_shapes(
+            others, length, base,
+            n_partitions=points.sparkSession.sparkContext.defaultParallelism)
+        cand = _candidates(points, covers.withColumnRenamed('cell', cell_col),
+                           cell_col, salt_shards, broadcast)
+        specs = others.select('shape_id', *dt_cols,
+                              _shape_spec_col(others).alias('_spec'))
         pred = _exact_predicate_spec_udf()
-        out = (cand.join(specs, 'shape_id')
-               .filter(pred(F.col('shape_id'), F.col('_spec'),
-                            F.col('lon'), F.col('lat')))
-               .drop('_spec'))
-    drop = dt_cols + (['join_key', '_shard'] if salt_shards else []) + \
-        (['_ck'] if (prefix_drop or numeric_key) else [])
-    return out.drop(*[c for c in drop if c in out.columns])
+        parts.append(matches(cand.join(specs, 'shape_id'), pred(
+            F.col('shape_id'), F.col('_spec'), F.col('lon'), F.col('lat'))))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def filter_points_by_shape(points: DataFrame, shapes: DataFrame,

@@ -104,6 +104,29 @@ def main() -> int:
           f'specs through the join (no driver collect)')
     ok &= spec
 
+    # per-kind routing: over a literal all-polygon catalog the circle
+    # branch folds away (no haversine, no carried circle columns) ...
+    plan = formatted(spatial_join_points(pts, poly, length=4, base=16,
+                                         time_gated=False))
+    no_circle = '_clon' not in plan and 'ATAN2' not in plan.upper()
+    print(f'[{"OK" if no_circle else "FAIL"}] literal all-polygon join has '
+          f'no circle branch')
+    ok &= no_circle
+    # ... while a parquet-read mixed catalog keeps both branches, with the
+    # shipped-spec predicate as the plan's only Python evaluation node
+    mixed_path = os.path.join(d, 'mixed_shapes.parquet')
+    shapes.unionByName(poly.withColumn(
+        'shape_id', F.col('shape_id') + 1_000_000), allowMissingColumns=True) \
+        .write.parquet(mixed_path)
+    plan = formatted(spatial_join_points(pts, spark.read.parquet(mixed_path),
+                                         length=4, base=16, time_gated=False))
+    import re
+    n_py = len(re.findall(r'^\(\d+\) \w*EvalPython', plan, flags=re.M))
+    mixed = n_py == 1 and 'ATAN2' in plan.upper()
+    print(f'[{"OK" if mixed else "FAIL"}] parquet mixed-kind join: circle '
+          f'branch plus exactly one Python predicate node ({n_py})')
+    ok &= mixed
+
     # bucketed co-located join: repeated joins on the points' cell key scan
     # pre-bucketed storage with NO Exchange on either side
     from geostructures_spark.plans.bucketing import bucketed_join, write_bucketed

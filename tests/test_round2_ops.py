@@ -265,22 +265,26 @@ def test_spatial_join_salted_matches_unsalted(spark):
     assert salted == base
 
 
-def test_shape_join_spec_path_matches_broadcast(spark, monkeypatch):
+def test_shape_join_circle_fixture_matches_brute_force(spark):
+    from geostructures_spark.kernels import shapes as shp
     from geostructures_spark.operators import shape_join as sj
-    from geostructures_spark.operators import spatial_join as spj
+    from geostructures_spark.operators.tiling import shape_row_to_kernel
     _, shapes = _join_fixture(spark)
     other = shapes.selectExpr(
         'shape_id + 100 AS shape_id', 'kind',
         'named_struct("center_lon", params.center_lon + 3.0, '
         '"center_lat", params.center_lat, "radius", 700000.0D) AS params',
         'rings', 'dt_start', 'dt_end')
-    base = {(r.a_id, r.b_id) for r in
-            sj.shape_join(shapes, other, length=3, time_gated=False).collect()}
-    monkeypatch.setattr(spj, '_BROADCAST_MAX_SHAPES', 0)
-    spec = {(r.a_id, r.b_id) for r in
-            sj.shape_join(shapes, other, length=3, time_gated=False).collect()}
-    assert len(base) > 0
-    assert spec == base
+    got = {(r.a_id, r.b_id) for r in
+           sj.shape_join(shapes, other, length=3, time_gated=False).collect()}
+    ca = {r['shape_id']: shape_row_to_kernel(r.asDict(recursive=True))
+          for r in shapes.collect()}
+    cb = {r['shape_id']: shape_row_to_kernel(r.asDict(recursive=True))
+          for r in other.collect()}
+    brute = {(a, b) for a in ca for b in cb
+             if shp.shapes_intersect(ca[a], cb[b])}
+    assert len(got) > 0
+    assert got == brute
 
 
 # --- filter_by_time + dt mutation coverage ---------------------------------

@@ -474,6 +474,17 @@ def box_contains_expr(lon: Column, lat: Column,
 # --- right-open time intervals as Column predicates ------------------------
 # (reference time.py:188-226; see kernels.timeops for the NumPy twin)
 
+def elapsed_us_expr(start: Column, end: Column, dtype: T.DataType) -> Column:
+    """end - start in whole microseconds (BIGINT) for inputs of type
+    ``dtype``: the Column twin of kernels.timeops.elapsed_seconds before
+    its ``/ 1e6``, which keeps sub-second time (unix_timestamp would
+    truncate to whole seconds). TIMESTAMP_NTZ values are differenced as
+    wall-clock readings in no time zone, as unix_timestamp reads them."""
+    if isinstance(dtype, T.TimestampNTZType):
+        return F.timestamp_diff('MICROSECOND', start, end)
+    return F.unix_micros(end.cast('timestamp')) - F.unix_micros(start.cast('timestamp'))
+
+
 def interval_contains_instant_expr(start: Column, end: Column, t: Column) -> Column:
     return F.when(start == end, start == t).otherwise((start <= t) & (t < end))
 

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geostructures_spark.functions.geo import niemeyer_encode_udf
+from geostructures_spark.functions.geo import elapsed_us_expr, niemeyer_encode_udf
 
 DEFAULT_COVER_PARTITIONS = 64
 
@@ -209,8 +209,9 @@ def hash_collection_agg(shapes: DataFrame, length: int = 8, base: int = 16,
         return joined.groupBy('cell').agg(F.count('*').alias('value'))
     if agg == 'total_time':
         return joined.groupBy('cell').agg(
-            F.sum(F.unix_timestamp('dt_end') - F.unix_timestamp('dt_start'))
-            .cast('double').alias('value'))
+            (F.sum(elapsed_us_expr(F.col('dt_start'), F.col('dt_end'),
+                                   shapes.schema['dt_start'].dataType))
+             .cast('double') / 1e6).alias('value'))
     if agg == 'unique_entities':
         return joined.groupBy('cell').agg(
             F.countDistinct(F.col('properties').getItem('entity')).alias('value'))

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from geostructures_spark.functions.geo import haversine_expr
+from geostructures_spark.functions.geo import elapsed_us_expr, haversine_expr
 
 __all__ = [
     'with_track_diffs', 'slice_track', 'convolve_duplicate_timestamps',
@@ -73,14 +73,15 @@ def with_track_diffs(tracks: DataFrame, entity_col: str = 'entity',
 
     Reference semantics: distances use the active geodesic (haversine
     default, geodesic.py:358-361); speed = distance / seconds
-    (collections.py:841-849). First ping per entity has NULLs (the reference
-    returns n-1 values)."""
+    (collections.py:841-849), with dt_sec at microsecond precision. First
+    ping per entity has NULLs (the reference returns n-1 values)."""
     w = _track_window(entity_col, time_col)
     prev_lon = F.lag(lon_col).over(w)
     prev_lat = F.lag(lat_col).over(w)
     prev_t = F.lag(time_col).over(w)
     dist = haversine_expr(prev_lon, prev_lat, F.col(lon_col), F.col(lat_col))
-    dt_sec = (F.unix_timestamp(F.col(time_col)) - F.unix_timestamp(prev_t)).cast('double')
+    dt_sec = (elapsed_us_expr(prev_t, F.col(time_col), tracks.schema[time_col].dataType)
+              .cast('double') / 1e6)
     # IEEE division semantics under ANSI mode: 0/0 -> NaN, x/0 -> inf
     # (mirrors the reference's NumPy array division, collections.py:841-849);
     # first ping per entity stays NULL (lag is NULL)

@@ -47,6 +47,52 @@ def test_track_distances_golden(spark):
     assert list(got) == [157.241] * 7
 
 
+def test_track_diffs_keep_sub_second_gaps(spark):
+    # dt_sec is exact to the microsecond (kernels/timeops.py elapsed_seconds):
+    # gaps of 0.25 s and 1.5 s, not the whole-second 0 and 2 of truncation
+    rows = [('a', (2020, 1, 1, 0, 0, 0, 750_000), 0.0, 0.0),
+            ('a', (2020, 1, 1, 0, 0, 1), 0.0, 0.001),
+            ('a', (2020, 1, 1, 0, 0, 2, 500_000), 0.0, 0.002)]
+    from geostructures_spark.operators.tracks import with_track_diffs
+    out = (with_track_diffs(_pings(spark, rows))
+           .filter(F.col('dt_sec').isNotNull())
+           .orderBy('dt_start').collect())
+    assert [r.dt_sec for r in out] == [0.25, 1.5]
+    assert [r.speed_mps for r in out] == [r.dist_m / r.dt_sec for r in out]
+
+
+def test_track_diffs_ntz_gaps_are_wall_clock(spark):
+    # TIMESTAMP_NTZ pings are differenced as wall-clock readings whatever
+    # the session time zone, as the oracles' DuckDB epoch_us reads them:
+    # 01:30 -> 03:30:00.25 across a US DST change is 7200.25 s
+    from geostructures_spark.operators.tracks import with_track_diffs
+    pings = spark.createDataFrame(
+        [('a', datetime(2024, 3, 10, 1, 30), 0.0, 0.0),
+         ('a', datetime(2024, 3, 10, 3, 30, 0, 250_000), 0.0, 0.001)],
+        'entity string, dt_start timestamp_ntz, lon double, lat double')
+    tz = spark.conf.get('spark.sql.session.timeZone')
+    spark.conf.set('spark.sql.session.timeZone', 'America/Los_Angeles')
+    try:
+        out = (with_track_diffs(pings).filter(F.col('dt_sec').isNotNull())
+               .select('dt_sec').collect())
+    finally:
+        spark.conf.set('spark.sql.session.timeZone', tz)
+    assert [r.dt_sec for r in out] == [7200.25]
+
+
+def test_hash_collection_total_time_keeps_sub_second(spark):
+    # total_time sums each shape's elapsed seconds with their fractions
+    from geostructures_spark.operators.tiling import (
+        SHAPES_SCHEMA_DDL, hash_collection_agg)
+    box = {'min_lon': 0.0, 'min_lat': 0.0, 'max_lon': 0.001, 'max_lat': 0.001}
+    shapes = spark.createDataFrame(
+        [(i, 'box', box, None, datetime(2020, 1, 1), datetime(2020, 1, 1, 0, 0, s, us), {})
+         for i, s, us in [(1, 0, 400_000), (2, 1, 350_000)]],
+        SHAPES_SCHEMA_DDL)
+    got = hash_collection_agg(shapes, length=4, base=16, agg='total_time').collect()
+    assert got and all(r.value == 1.75 for r in got)
+
+
 def test_impossible_journeys_golden(spark):
     # tests/test_collections.py:1067-1083
     rows = [
